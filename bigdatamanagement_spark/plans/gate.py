@@ -67,9 +67,10 @@ ARROW_ALLOWED: dict[str, str] = {
     "ext_multiprobe_lsh_ann_topk": "trained-plane projections + margin "
     "flips via mapInPandas (same matmul pass)",
     "ext_semdedup_summary": "per-cell matmul via applyInPandas",
-    "ext_semdedup_fixed": "per-cell EXACT float64 matmul via applyInPandas"
-    " (integer values < 2^53 throughout; replaced 50M interpreted"
-    " zip_with pair dots — 6.05 s -> 1.9 s warm, oracle unchanged)",
+    "ext_semdedup_fixed": "two Arrow boundaries: int64 argmin cell assignment"
+    " via mapInPandas (replaced interpreted array_sort/zip_with lambdas),"
+    " then per-cell EXACT float64 matmul via applyInPandas (integer values"
+    " < 2^53 throughout; replaced 50M interpreted zip_with pair dots)",
     "ext_multi_signal_dedup": "embedding-cosine signal (blocked matmul)",
     "ext_s_multi_signal_dedup": "sampled twin of ext_multi_signal_dedup",
 }

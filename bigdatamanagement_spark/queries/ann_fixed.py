@@ -600,32 +600,60 @@ QUERIES["ext_ivf_filtered_ann_topk"] = ivf_filtered_ann_topk
 SEMDEDUP_T_MICRO = 400_000  # cosine >= 0.4, in micro units
 
 
+def _nearest_cells(vq, cm):
+    """Index of each row's nearest centroid by exact int64 squared L2,
+    ties to the lower cell id (``argmin`` returns the first minimum) —
+    the same cell as ``_CELLS_SORTED_EXPR[0].cell``. ``vq`` is (n, DIM)
+    micro ints, ``cm`` (N_CELLS, DIM): every difference is < ~2e6, so a
+    squared distance stays below 2^63."""
+    d = vq[:, None, :] - cm[None, :, :]
+    return (d * d).sum(axis=2).argmin(axis=1)
+
+
+def semdedup_assigned(spark, sf_dir) -> DataFrame:
+    """Quantized corpus rows with their nearest fixed-centroid ``cell``,
+    assigned by one vectorized ``mapInPandas`` pass (``_nearest_cells``)
+    instead of the interpreted per-row ``array_sort``/``zip_with``
+    lambdas of ``_CELLS_SORTED_EXPR``."""
+    import numpy as np
+
+    cm = np.array(
+        [r["cv"] for r in sorted(_param_rows("centroids"), key=lambda r: r["cell"])],
+        dtype=np.int64,
+    )
+
+    def assign(batches):
+        for pdf in batches:
+            vq = np.array(pdf["vq"].tolist(), dtype=np.int64).reshape(len(pdf), DIM)
+            yield pdf.assign(cell=_nearest_cells(vq, cm).astype(np.int32))
+
+    return (
+        _quantized(spark, sf_dir)
+        .filter(F.col("nrm") > 0)
+        .mapInPandas(assign, "vec_id long, vq array<bigint>, nrm long, cell int")
+    )
+
+
 def semdedup_fixed(spark, sf_dir) -> DataFrame:
     """ext — SemDeDup mechanics (Abbas et al. 2023) under the oracle
-    gate: vectors assign to fixed-centroid cells by exact BIGINT L2
-    (the IVF twin's assignment), each cell's pairwise micro-cosines
-    compare against the literal threshold, and a vector is a duplicate
-    iff a SMALLER-id cell-mate scores >= threshold (the paper's
-    deterministic keep-min-id policy). Per-cell report: vectors, dups.
-    Cross-cell pairs are never compared — the approximation that makes
-    web-scale semantic dedup tractable; the trained-centroid variant
-    (extensions.semdedup_summary) stays rows-only with its policy
-    pinned in tests.
+    gate: vectors assign to fixed-centroid cells by exact int64 L2
+    (the IVF twin's assignment, ties to the lower cell id), each cell's
+    pairwise micro-cosines compare against the literal threshold, and a
+    vector is a duplicate iff a SMALLER-id cell-mate scores >= threshold
+    (the paper's deterministic keep-min-id policy). Per-cell report:
+    vectors, dups. Cross-cell pairs are never compared — the
+    approximation that makes web-scale semantic dedup tractable; the
+    trained-centroid variant (extensions.semdedup_summary) stays
+    rows-only with its policy pinned in tests.
 
-    Scale: assignment is one scan (literal centroids); the pairwise
-    stage is one cell-keyed self-join — expected cell size is bounded
-    when n_cells grows with the corpus (paper: ~1e5 cells)."""
-    base = _quantized(spark, sf_dir).filter(F.col("nrm") > 0)
-    assigned = (
-        base.join(F.broadcast(_one_row_param_df(spark, "centroids")))
-        .select(
-            "vec_id",
-            "vq",
-            "nrm",
-            F.expr(_CELLS_SORTED_EXPR + "[0].cell").alias("cell"),
-        )
-        .localCheckpoint()
-    )
+    Scale: one pipeline with no pin, each stage run once. Assignment is
+    a map over the scan partitions (numpy argmin per Arrow batch); the
+    pairwise stage is one cell-keyed shuffle into ``applyInPandas`` —
+    expected cell size is bounded when n_cells grows with the corpus
+    (paper: ~1e5 cells). The report has one row per cell, so the final
+    order is a single-partition sort: an ``orderBy`` would
+    range-partition and run the Python stage twice (once to sample the
+    bounds, once for the shuffle)."""
     # Per-cell pairwise stage as ONE exact float64 matmul per cell
     # instead of an interpreted aggregate(zip_with(...)) per pair: at
     # sf0.1 that was 50M pairs x 64 interpreted lambda steps = the
@@ -662,9 +690,11 @@ def semdedup_fixed(spark, sf_dir) -> DataFrame:
         )
 
     return (
-        assigned.groupBy("cell")
+        semdedup_assigned(spark, sf_dir)
+        .groupBy("cell")
         .applyInPandas(cell_report, "cell long, n_vectors long, n_dups long")
-        .orderBy("cell")
+        .repartition(1)
+        .sortWithinPartitions("cell")
     )
 
 

@@ -109,3 +109,53 @@ def test_filtered_ann_prefilter_semantics(spark, sf_dir, duck):
     # top-10 of some query must contain a wrong-label neighbor
     unfiltered = A.ivf_ann_topk_fixed(spark, sf_dir).collect()
     assert any(labels[r.neighbor_id] != A.FILTER_LABEL for r in unfiltered)
+
+
+@pytest.mark.parametrize("sf", ["sf0.01", "sf0.1"])
+def test_semdedup_cells_match_sql_assignment(spark, sf):
+    """The vectorized mapInPandas assignment gives every embedding the
+    cell of the SQL expression (``_CELLS_SORTED_EXPR[0].cell``)."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from tests.conftest import SF_DIR
+
+    sf_path = os.path.join(os.path.dirname(SF_DIR), sf)
+    got = {
+        r.vec_id: r.cell
+        for r in ann_fixed.semdedup_assigned(spark, sf_path)
+        .select("vec_id", "cell")
+        .collect()
+    }
+    want = {
+        r.vec_id: r.cell
+        for r in ann_fixed.ivf_assigned(spark, sf_path)
+        .select("vec_id", F.expr("cells[0].cell").alias("cell"))
+        .collect()
+    }
+    assert want and got == want
+
+
+def test_semdedup_cell_ties_go_to_lower_id(spark):
+    """A vector equidistant from two nearest centroids lands in the lower
+    cell id, both in the numpy kernel and in the SQL expression."""
+    import numpy as np
+    import pyspark.sql.functions as F
+
+    dim, n_cells = ann_fixed.DIM, ann_fixed.N_CELLS
+    cm = np.full((n_cells, dim), 1000, dtype=np.int64)
+    cm[2] = 0
+    cm[5] = 0
+    cm[2, 0] = 7  # |v - cm[2]|^2 == |v - cm[5]|^2 == 49, others far
+    cm[5, 1] = 7
+    v = np.zeros((1, dim), dtype=np.int64)
+    assert ann_fixed._nearest_cells(v, cm).tolist() == [2]
+
+    df = spark.createDataFrame(
+        [(v[0].tolist(), cm.tolist())], "vq array<bigint>, cm array<array<bigint>>"
+    )
+    sql_cell = df.select(
+        F.expr(ann_fixed._CELLS_SORTED_EXPR + "[0].cell").alias("c")
+    ).first().c
+    assert sql_cell == 2
